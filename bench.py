@@ -77,8 +77,9 @@ def crawl_bench(
     # Cache only what the fetch join reads (column pruning drops the
     # text-decode UDF entirely), HASH-PARTITIONED BY THE JOIN KEY: the
     # cached partitioning satisfies the fetch join's distribution
-    # requirement, so each epoch only shuffles the small select batch —
-    # the 20 KB html payloads never move AND no serial 500k-row
+    # requirement, so an epoch above the engine's FETCH_BROADCAST_ROWS
+    # cutover (the 500k-row bench epochs) only shuffles the small select
+    # batch — the 20 KB html payloads never move AND no serial 500k-row
     # broadcast is built on the driver (the round-1 bottleneck at
     # local[32]).  Same trick as Iceberg bucket-by-url at cluster scale.
     cpus = spark.sparkContext.defaultParallelism
@@ -89,28 +90,19 @@ def crawl_bench(
     wh = tempfile.mkdtemp(
         prefix="bench_wh_", dir=os.environ.get("SPARK_GRAFT_WH_DIR")
     )
-    # Fetch-join strategy (A/B-able): 'shuffle' pairs with the
-    # url-partitioned pages cache above — only the small batch side
-    # shuffles, NOTHING is built serially on the driver (the forced
-    # full-batch broadcast was measured to flatline fetch-stage scaling
-    # at local[32]: a 500k-row driver-built relation per epoch).
-    # 'broadcast' keeps the old single-JVM behavior for comparison.
-    fetch_join = os.environ.get("SPARK_GRAFT_FETCH_JOIN", "shuffle")
-    # Seen-set tier under test: 'exact' (merge-join only, default),
-    # 'cuckoo' (north-star primary) or 'bloom' (fallback).  Filter
-    # capacity is sized from the world: ~2 slots per page at 4-slot
-    # buckets keeps the load factor < 0.5 (no eviction-chain tail).
+    # Seen-set tier under test: 'exact' (merge-join only, default) or
+    # 'cuckoo' (approximate pre-filter).  Filter capacity is sized from
+    # the world: ~2 slots per page at 4-slot buckets keeps the load
+    # factor < 0.5 (no eviction-chain tail).
     seen_filter = os.environ.get("SPARK_GRAFT_SEEN_FILTER", "exact")
     seen_kw = {}
     if seen_filter != "exact":
         buckets = 1 << max(int(n_pages * 2 / (64 * 4)) - 1, 255).bit_length()
-        seen_kw = dict(
-            seen_shards_n=64, seen_buckets=buckets, seen_bits=buckets * 64
-        )
+        seen_kw = dict(seen_shards_n=64, seen_buckets=buckets)
     eng = CrawlEngine(
         spark, pages, robots, politeness, wh,
         handler=BENCH_HANDLER, loop_limit=10_000_000,
-        fetch_join=fetch_join, seen_filter=seen_filter, **seen_kw,
+        seen_filter=seen_filter, **seen_kw,
         **(engine_kwargs or {}),
     )
     eng.seed(synth.gen_seeds(spark, pages, max(n_pages // 2, 100)))
@@ -171,8 +163,9 @@ def crawl_only_main() -> None:
         shuffle_partitions=cpus,
         extra_conf={
             "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
-            # fetch join = shuffled-HASH join against the partitioned
-            # pages cache; sort-merge would sort the 20 KB html side
+            # large-batch fetch join = shuffled-HASH join against the
+            # partitioned pages cache; sort-merge would sort the 20 KB
+            # html side
             "spark.sql.join.preferSortMergeJoin": "false",
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": evdir,

@@ -10,7 +10,7 @@ re-expresses its *semantics* set-at-a-time:
 - priority queue       -> window ranking (priority DESC, seq ASC)
 - token-bucket rate    -> per-host budget vs window rank filter
 - robots gating        -> broadcast-joined rules table
-- URL-seen set         -> exact anti-join + partitioned bloom shards
+- URL-seen set         -> exact anti-join + partitioned cuckoo shards
 - link/text extraction -> vectorized Arrow pandas UDFs
 - crawl loop           -> deterministic epoch loop with atomic snapshots
 

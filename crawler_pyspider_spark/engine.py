@@ -18,7 +18,7 @@ One epoch = one pass of the reference scheduler's ``run_once``
     commit   frontier, token state, pending follows, results delta,
              metrics -> atomic snapshot; resume restarts here
 
-No wall-clock anywhere: ``now = base_ts + epoch · interval``.  The
+No wall-clock anywhere: ``now = BASE_EPOCH_TS + epoch · interval``.  The
 follow sequence number is ``epoch·1e9 + parent_rank·1e4 + link_index``
 (deterministic replacement for the reference's global AtomInt,
 task_queue.py:28-38), so crawl ordering is reproducible and comparable
@@ -39,10 +39,16 @@ from crawler_pyspider_spark.checkpoint import SnapshotStore
 from crawler_pyspider_spark.functions.extract import parse_page_meta
 from crawler_pyspider_spark.functions.urls import with_url_identity
 from crawler_pyspider_spark.operators import frontier as FR
-from crawler_pyspider_spark.operators import cuckoo, seenset
+from crawler_pyspider_spark.operators import cuckoo
 from crawler_pyspider_spark.operators.robots import robots_gate
 
 BASE_EPOCH_TS = 1704067200.0  # 2024-01-01T00:00:00Z — fixture base time
+
+# Fetch-join cutover, in rows of the select batch.  At or below it the
+# batch is broadcast and the pages stream map-side; above it the batch
+# is the build side of a shuffled hash join (a 10^6-row batch with urls
+# is order-100 MB replicated per executor — too big to force).
+FETCH_BROADCAST_ROWS = 300_000
 
 
 # --------------------------------------------------------------------------
@@ -255,17 +261,11 @@ class CrawlEngine:
         n_host_buckets: int = 1024,
         n_salts: int = 8,
         salt_threshold: int = 10000,
-        base_ts: float = BASE_EPOCH_TS,
         seen_filter: str = "exact",
-        seen_shards_n: int = seenset.DEFAULT_SHARDS,
-        seen_bits: int = seenset.DEFAULT_BITS,
-        seen_k: int = seenset.DEFAULT_K,
+        seen_shards_n: int = cuckoo.DEFAULT_SHARDS,
         seen_buckets: int = cuckoo.DEFAULT_BUCKETS,
         fail_pause_num: int | None = None,
         pause_epochs: int = 3,
-        fetch_broadcast_rows: int = 300_000,
-        fetch_join: str = "auto",
-        rank_small_threshold: int = 100_000,
         taskid_fn=None,
         projects: dict | None = None,
         handlers: dict | None = None,
@@ -273,7 +273,7 @@ class CrawlEngine:
         fetch_pool_size: int = 100,
         fetch_timeout: float = 20.0,
         max_redirects: int = 5,
-        frontier_compact_min_rows: int = 50_000,
+        frontier_cow_max_rows: int = 50_000,
         frontier_compact_ratio: float = 0.2,
     ):
         self.spark = spark
@@ -313,29 +313,20 @@ class CrawlEngine:
         self.n_host_buckets = n_host_buckets
         self.n_salts = n_salts
         self.salt_threshold = salt_threshold
-        self.base_ts = base_ts
-        if seen_filter not in ("exact", "bloom", "cuckoo"):
+        if seen_filter not in ("exact", "cuckoo"):
             raise ValueError(
-                f"seen_filter must be 'exact', 'bloom' or 'cuckoo', got {seen_filter!r}"
+                f"seen_filter must be 'exact' or 'cuckoo', got {seen_filter!r}"
             )
-        self.seen_filter = seen_filter
         self.seen_shards_n = seen_shards_n
-        self.seen_bits = seen_bits
-        self.seen_k = seen_k
         self.seen_buckets = seen_buckets
-        # approximate-membership tier (SURVEY §4; north-star: cuckoo
-        # primary, bloom fallback): pre-filter in front of the frontier
-        # merge join; filter-negative URLs append without a join.  Both
-        # tiers share the probe_combined/split contract and the same
-        # shard shuffle key, so the epoch loop below is tier-agnostic.
-        if seen_filter == "cuckoo":
-            self.seen_shards: DataFrame | None = cuckoo.empty_shards(
-                spark, seen_shards_n, seen_buckets
-            )
-        elif seen_filter == "bloom":
-            self.seen_shards = seenset.empty_shards(spark, seen_shards_n, seen_bits)
-        else:
-            self.seen_shards = None
+        # approximate-membership tier (SURVEY §4): a cuckoo-filter
+        # pre-filter in front of the frontier merge join; filter-negative
+        # URLs append without a join.
+        self.seen_shards: DataFrame | None = (
+            cuckoo.empty_shards(spark, seen_shards_n, seen_buckets)
+            if seen_filter == "cuckoo"
+            else None
+        )
 
         # pause state machine (A10; scheduler.py:52-103): per-project
         # consecutive-failure streak; ≥ fail_pause_num pauses selection
@@ -343,35 +334,6 @@ class CrawlEngine:
         # per-epoch jobs).
         self.fail_pause_num = fail_pause_num
         self.pause_epochs = pause_epochs
-        # Explicit-broadcast cutover for the fetch join, in ROWS of the
-        # select batch.  Above it, AQE decides (a 10^6-row batch with
-        # urls is order-100 MB replicated per executor — too big to
-        # force).  Single-JVM local benches may raise it: local mode
-        # keeps exactly one broadcast copy, so "never shuffle the html"
-        # stays the right trade there at any batch size.
-        self.fetch_broadcast_rows = fetch_broadcast_rows
-        # fetch-join strategy for pages mode:
-        #   auto      — row-bounded: broadcast small batches, skinny
-        #               probe above fetch_broadcast_rows (default)
-        #   broadcast — always build-side-broadcast the full batch
-        #   probe     — always the distinct-url probe + page-side parse
-        #   shuffle   — NO driver-built relation at all: plain equi-join;
-        #               when the pages frame is cached pre-partitioned by
-        #               url (bench does this) only the small batch side
-        #               shuffles — the co-located-join shape a cluster
-        #               gets from Iceberg bucket-by-url
-        if fetch_join not in ("auto", "broadcast", "probe", "shuffle"):
-            raise ValueError(f"fetch_join={fetch_join!r}")
-        self.fetch_join = fetch_join
-        # parent-rank path cutover: below it a single-reducer rank (one
-        # exchange, no persist, no extra count job); above it the
-        # distributed range-partition rank.  Even though the rank input
-        # is only the 8-byte seq column, the serial sort idles every
-        # other core — an ABBA A/B at 300k pages / local[32] measured
-        # the distributed path 1.6× faster end-to-end at a 150k-row
-        # batch, so the cutover sits at 100k (≈ one shuffle partition's
-        # worth), not at the memory-comfort bound
-        self.rank_small_threshold = rank_small_threshold
         # get_taskid override (base_handler.py:340-342): a callable
         # DataFrame -> Column producing the dedup key; default is
         # md5(canonical url) via with_url_identity
@@ -432,10 +394,10 @@ class CrawlEngine:
         # writes/shuffles O(delta) instead of O(frontier): at a 10^10-row
         # frontier an epoch that touches 10^5 tasks costs 10^5, not
         # 10^10.  The base is rewritten (compaction) when it is small
-        # (``base_rows ≤ frontier_compact_min_rows`` — rewriting a small
+        # (``base_rows ≤ frontier_cow_max_rows`` — rewriting a small
         # base is cheaper than delta bookkeeping) or when the delta
         # reaches ``frontier_compact_ratio · base_rows``.
-        self.frontier_compact_min_rows = frontier_compact_min_rows
+        self.frontier_cow_max_rows = frontier_cow_max_rows
         self.frontier_compact_ratio = frontier_compact_ratio
         self._fr_base: DataFrame = FR.empty_frontier(spark)
         self._fr_base_epoch: int = -1
@@ -457,7 +419,7 @@ class CrawlEngine:
     # -- time --------------------------------------------------------------
     def now(self, epoch: int | None = None) -> float:
         e = self.epoch if epoch is None else epoch
-        return self.base_ts + (e + 1) * self.epoch_interval
+        return BASE_EPOCH_TS + (e + 1) * self.epoch_interval
 
     # -- merge-on-read frontier ---------------------------------------------
     DELTA_COLS = FR.FRONTIER_COLS + ["_live"]
@@ -478,7 +440,7 @@ class CrawlEngine:
             self._fr_delta.filter(F.col("_live")).drop("_live")
         )
 
-    def _apply_changes(self, changes: DataFrame, caches: list) -> None:
+    def _apply_changes(self, changes: DataFrame) -> None:
         """Fold change rows (FRONTIER_COLS, unique per key) into the
         delta — an upsert over O(delta) rows, never over the base.
 
@@ -525,7 +487,7 @@ class CrawlEngine:
         self._fr_delta_empty = False
         self._rebuild_view()
 
-    def _drop_keys(self, keys: DataFrame, caches: list) -> None:
+    def _drop_keys(self, keys: DataFrame) -> None:
         """Delete (project, taskid) keys from the frontier via delta
         tombstones (the MoR equivalent of the reference's taskdb row
         deletes for ephemeral control tasks).  A later re-insert of the
@@ -656,7 +618,7 @@ class CrawlEngine:
 
         rows: list[tuple] = []
         base_seq = self.epoch * 1_000_000_000 + 900_000_000
-        tick = int(round(now - self.base_ts))
+        tick = int(round(now - BASE_EPOCH_TS))
         for proj, name, cb in self._cb_items():
             # fire whenever the interval has ELAPSED since the last
             # firing (reference @every semantics, base_handler.py:69-98)
@@ -770,25 +732,24 @@ class CrawlEngine:
         exercised by its tests/test_scheduler.py:716-724): frontier rows
         tombstoned, pending arrivals dropped, projectdb/handler/cron
         state cleared, and in cuckoo mode the seen-tier FORGETS the
-        project's keys (operators/cuckoo.py delete_keys — the capability
-        bloom lacks) so re-seeding re-admits them via the
-        filter-negative fast path.
+        project's keys (operators/cuckoo.py delete_keys) so re-seeding
+        re-admits them via the filter-negative fast path.
 
         Correctness never depends on filter deletion: a stale positive
         still goes through the exact decision join against a frontier
         that no longer holds the rows, so the URL re-enters as new —
-        only the join-free fast path is lost.  Bloom mode therefore
-        skips the filter update.  Keys whose taskid is shared with
-        ANOTHER project stay in the filter (one stored copy covers all
-        projects; removing it would hand the other project's duplicates
-        the novel-append path and break the frontier-unique invariant).
+        only the join-free fast path is lost.  Keys whose taskid is
+        shared with ANOTHER project stay in the filter (one stored copy
+        covers all projects; removing it would hand the other project's
+        duplicates the novel-append path and break the frontier-unique
+        invariant).
 
         Forces a compaction at the next commit so the tombstones fold
         away instead of riding the delta."""
         keys = self.frontier.filter(F.col("project") == name).select(
             "project", "taskid"
         )
-        if self.seen_filter == "cuckoo" and self.seen_shards is not None:
+        if self.seen_shards is not None:
             keys = keys.cache()  # read twice: filter delete + tombstones
             self._extra_caches.append(keys)
             others = self.frontier.filter(F.col("project") != name).select(
@@ -801,7 +762,7 @@ class CrawlEngine:
                 n_shards=self.seen_shards_n,
                 buckets=self.seen_buckets,
             )
-        self._drop_keys(keys, self._extra_caches)
+        self._drop_keys(keys)
         self._force_compact = True
         if self.pending is not None:
             self.pending = self.pending.filter(F.col("project") != name)
@@ -932,43 +893,32 @@ class CrawlEngine:
                 # isin predicate over the dim list, no join, no shuffle
                 inc = inc.filter(F.col("project").isin(active))
             # cache the canonicalized batch: the merge, the deferred
-            # split, and (bloom mode) the probe all read it — without
+            # split, and (cuckoo mode) the probe all read it — without
             # the cache, writing the frontier and pending snapshots
             # re-runs the canonicalize UDF + dedup over the whole batch
             inc = inc.cache()
             caches.append(inc)
             if self.seen_shards is not None:
-                # bloom pre-filter: ONE cogroup pass probes + inserts;
-                # bloom-positive rows go through the exact decision
-                # join, bloom-negative rows are definitely novel and
+                # cuckoo pre-filter: ONE cogroup pass probes + inserts;
+                # filter-positive rows go through the exact decision
+                # join, filter-negative rows are definitely novel and
                 # APPEND to the frontier with no join/shuffle at all
                 inc = FR.dedup_batch(inc)
                 # INQUEUE_LIMIT (F9) must gate the WHOLE batch before
-                # the bloom split — novel rows bypass merge_incoming, so
+                # the filter split — novel rows bypass merge_incoming, so
                 # admitting here is the only place the cap can see them;
                 # this matches exact-mode ordering (dedup → limit →
                 # decision) exactly.  No-op when no limit is set (bench).
                 if self.inqueue_limit:
                     inc = FR.apply_inqueue_limit(inc, self.frontier, self.inqueue_limit)
-                if self.seen_filter == "cuckoo":
-                    combined = cuckoo.probe_combined(
-                        inc,
-                        self.seen_shards,
-                        n_shards=self.seen_shards_n,
-                        buckets=self.seen_buckets,
-                    ).cache()
-                    caches.append(combined)
-                    flagged, self.seen_shards = cuckoo.split(combined)
-                else:
-                    combined = seenset.probe_combined(
-                        inc,
-                        self.seen_shards,
-                        n_shards=self.seen_shards_n,
-                        bits=self.seen_bits,
-                        k=self.seen_k,
-                    ).cache()
-                    caches.append(combined)
-                    flagged, self.seen_shards = seenset.split(combined)
+                combined = cuckoo.probe_combined(
+                    inc,
+                    self.seen_shards,
+                    n_shards=self.seen_shards_n,
+                    buckets=self.seen_buckets,
+                ).cache()
+                caches.append(combined)
+                flagged, self.seen_shards = cuckoo.split(combined)
                 maybe = flagged.filter(F.col("seen")).drop("seen", "shard")
                 novel = flagged.filter(~F.col("seen")).drop("seen", "shard")
                 changes, deferred = FR.merge_changes(
@@ -992,7 +942,7 @@ class CrawlEngine:
             # scaling profile).  ``ingested`` stays the RAW pending size
             # (the work the engine was asked to schedule), not the
             # post-dedup distinct count.
-            self._apply_changes(changes, caches)
+            self._apply_changes(changes)
             n_inc = inc.count()
             m["ingested"] = (
                 self._pending_rows if self._pending_rows is not None else n_inc
@@ -1124,11 +1074,6 @@ class CrawlEngine:
                     "orig_url", F.col("url")
                 ).withColumn("_redirects", F.lit(0))
             if self.fetch_mode == "http":
-                data_rows = data_rows.withColumn(
-                    "_p_cookies", F.lit(None).cast("string")
-                )
-            pre_parsed = False  # probe path parses page-side, before join-back
-            if self.fetch_mode == "http":
                 # production path: repartition by host_bucket (few hosts
                 # per partition — connection reuse + politeness
                 # locality), then the pooled mapInPandas GET stage;
@@ -1136,6 +1081,9 @@ class CrawlEngine:
                 # so the missing anti-join below is an empty no-op
                 from crawler_pyspider_spark.functions.fetch_http import fetch_http
 
+                data_rows = data_rows.withColumn(
+                    "_p_cookies", F.lit(None).cast("string")
+                )
                 hit_join = fetch_http(
                     http_rows.repartition(
                         self.spark.sparkContext.defaultParallelism, "host_bucket"
@@ -1159,74 +1107,26 @@ class CrawlEngine:
                     ).cast("string").alias("_p_etag"),
                 )
                 # The select batch is the SMALL side (≤ loop_limit rows);
-                # the html payloads (the fat side) must never shuffle.
-                # Two strategies by batch size:
-                #  - small: broadcast the whole task batch, stream pages
-                #    map-side (hits inner join + anti-join for 404s);
-                #  - large (skinny probe): broadcasting the full 22-col
-                #    task row is a serial driver cost that caps scaling,
-                #    so broadcast only the DISTINCT url probe, parse
-                #    page-side (html never leaves its partition), and
-                #    join the SMALL parse output (title+links) back to
-                #    the task batch — a small×small shuffle join.
-                has_custom_parse = any(
-                    cb.parse for _, _, cb in self._cb_items()
+                # the html payloads (the fat side) must never shuffle or
+                # sort.  Small batches broadcast and the pages stream
+                # map-side.  Above FETCH_BROADCAST_ROWS the join hints
+                # SHUFFLE_HASH with the BATCH as build side: the
+                # planner's default SMJ re-SORTS the fat page side on
+                # every epoch — measured 1072 task-cpu-seconds per
+                # 50k-page epoch at the 100k bench world, the single
+                # largest stage of the leg — while a shuffled hash join
+                # streams the pages unsorted and builds only the
+                # ≤ loop_limit-row batch into memory.
+                batch = (
+                    F.broadcast(http_rows)
+                    if n_selected <= FETCH_BROADCAST_ROWS
+                    else http_rows.hint("shuffle_hash")
                 )
-                if self.fetch_join == "probe" and not has_custom_parse:
-                    use_probe = True
-                elif self.fetch_join in ("broadcast", "shuffle"):
-                    use_probe = False
-                else:  # auto: row-bounded cutover
-                    use_probe = (
-                        n_selected > self.fetch_broadcast_rows
-                        and not has_custom_parse
-                    )
-                if use_probe:
-                    pre_parsed = True
-                    probe = F.broadcast(http_rows.select("url").distinct())
-                    page_hits = page_side.join(
-                        probe, probe["url"] == page_side["_p_url"], "inner"
-                    ).drop("_p_url")
-                    parsed = page_hits.withColumn(
-                        "_parsed", parse_page_meta(F.col("url"), F.col("_p_html"))
-                    ).select(
-                        "url",
-                        "_p_status",
-                        "_p_etag",
-                        F.col("_parsed.title").alias("_title"),
-                        F.col("_parsed.links").alias("_links"),
-                    )
-                    hit_join = http_rows.join(parsed, "url", "inner")
-                else:
-                    # custom-parse callbacks need the raw html row-side,
-                    # so the probe path is off; only hint broadcast when
-                    # the batch is under the cap — above it, leave the
-                    # join unhinted and let AQE pick the strategy rather
-                    # than force an unbounded driver-built broadcast
-                    # non-broadcast paths hint SHUFFLE_HASH with the
-                    # BATCH as build side: the planner's default SMJ
-                    # re-SORTS the fat page side (html payloads) on
-                    # every epoch — measured 1072 task-cpu-seconds per
-                    # 50k-page epoch at the 100k bench world, the single
-                    # largest stage of the leg — while a shuffled hash
-                    # join streams the pages unsorted and builds only
-                    # the ≤ loop_limit-row batch into memory
-                    if self.fetch_join == "shuffle":
-                        # co-partitioned equi-join (cache is url-hashed)
-                        batch = http_rows.hint("shuffle_hash")
-                    elif self.fetch_join == "broadcast":
-                        batch = F.broadcast(http_rows)
-                    else:
-                        batch = (
-                            F.broadcast(http_rows)
-                            if n_selected <= self.fetch_broadcast_rows
-                            else http_rows.hint("shuffle_hash")
-                        )
-                    hit_join = page_side.join(
-                        batch,
-                        http_rows["url"] == page_side["_p_url"],
-                        "inner",
-                    ).drop("_p_url")
+                hit_join = page_side.join(
+                    batch,
+                    http_rows["url"] == page_side["_p_url"],
+                    "inner",
+                ).drop("_p_url")
 
             # ---- process (step 5): status gate + one-pass parse ----
             # F6: effective status (304 when the stored etag matches),
@@ -1235,18 +1135,7 @@ class CrawlEngine:
             # on null, so skipped pages cost no decode.  Only title+links
             # stay in the cached frame (full text would multiply cache
             # memory by the page size for nothing — response.py:105).
-            if pre_parsed:
-                data_side = (
-                    data_rows.withColumn(
-                        "_parsed", parse_page_meta(F.col("url"), F.col("_p_html"))
-                    )
-                    .withColumn("_title", F.col("_parsed.title"))
-                    .withColumn("_links", F.col("_parsed.links"))
-                    .drop("_p_html", "_parsed")
-                )
-                fetched = hit_join.unionByName(data_side)
-            else:
-                fetched = hit_join.unionByName(data_rows)
+            fetched = hit_join.unionByName(data_rows)
             catch_cbs = [
                 self._dkey(p, n) for p, n, cb in self._cb_items()
                 if cb.catch_status_code_error
@@ -1272,51 +1161,33 @@ class CrawlEngine:
                 for p, n, cb in self._cb_items()
                 if cb.parse
             }
-            if pre_parsed:
-                # probe path already parsed page-side (once per distinct
-                # url); rows the gate skips (_process false) simply
-                # don't feed follows/results downstream
-                ok = flagged.withColumn(
-                    "_result", F.lit(None).cast("string")
-                ).drop("_p_status")
-            elif custom:
-                # J5: rows targeting a callback with a custom parse body
-                # run its pandas UDF; everything else takes the built-in
-                # parser.  One branch per distinct callback, unioned —
-                # each branch is its own Arrow stage over its subset.
-                branches = [
-                    flagged.filter(~self._dispatch_col().isin(list(custom)))
-                    .withColumn("_parsed", parse_page_meta(F.col("url"), gated_html))
+            # J5: rows targeting a callback with a custom parse body run
+            # its pandas UDF; everything else takes the built-in parser.
+            # One branch per distinct callback, unioned — each branch is
+            # its own Arrow stage over its subset.
+            def _parse_branch(rows, parsed, result):
+                return (
+                    rows.withColumn("_parsed", parsed)
                     .withColumn("_title", F.col("_parsed.title"))
                     .withColumn("_links", F.col("_parsed.links"))
-                    .withColumn("_result", F.lit(None).cast("string"))
-                    .drop("_parsed")
-                ]
-                for dkey, fn in custom.items():
-                    udf = make_parse_udf(fn)
-                    branches.append(
-                        flagged.filter(self._dispatch_col() == dkey)
-                        .withColumn(
-                            "_parsed", udf(F.col("url"), gated_html, F.col("save"))
-                        )
-                        .withColumn("_title", F.col("_parsed.title"))
-                        .withColumn("_links", F.col("_parsed.links"))
-                        .withColumn("_result", F.col("_parsed.result"))
-                        .drop("_parsed")
-                    )
-                ok = branches[0]
-                for b in branches[1:]:
-                    ok = ok.unionByName(b)
-                ok = ok.drop("_p_html", "_p_status")
-            else:
-                ok = (
-                    flagged.withColumn(
-                        "_parsed", parse_page_meta(F.col("url"), gated_html)
-                    )
-                    .withColumn("_title", F.col("_parsed.title"))
-                    .withColumn("_links", F.col("_parsed.links"))
-                    .withColumn("_result", F.lit(None).cast("string"))
+                    .withColumn("_result", result)
                     .drop("_p_html", "_parsed", "_p_status")
+                )
+
+            ok = _parse_branch(
+                flagged.filter(~self._dispatch_col().isin(list(custom)))
+                if custom
+                else flagged,
+                parse_page_meta(F.col("url"), gated_html),
+                F.lit(None).cast("string"),
+            )
+            for dkey, fn in custom.items():
+                ok = ok.unionByName(
+                    _parse_branch(
+                        flagged.filter(self._dispatch_col() == dkey),
+                        make_parse_udf(fn)(F.col("url"), gated_html, F.col("save")),
+                        F.col("_parsed.result"),
+                    )
                 )
             ok = ok.cache()
             caches.append(ok)
@@ -1395,7 +1266,6 @@ class CrawlEngine:
                     "_parent_rank",
                     [F.asc("seq")],
                     approx_rows=n_selected,
-                    small_threshold=self.rank_small_threshold,
                     cache_list=caches,
                 )
                 parents = parents_full.join(ranked, "seq")
@@ -1495,11 +1365,10 @@ class CrawlEngine:
                     FR.status_changes(
                         self.frontier, statuses.drop("callback"), now
                     ),
-                ],
-                caches,
+                ]
             )
             if drop_keys is not None:
-                self._drop_keys(drop_keys, caches)
+                self._drop_keys(drop_keys)
             m["t_status_fold"] = round(_time.monotonic() - _t, 2)
             _t = _time.monotonic()
             m["robots_denied"] = denied.count()
@@ -1532,7 +1401,7 @@ class CrawlEngine:
         ).collect()[0]  # checkpointed — one cheap O(delta) job
         delta_rows, delta_live = int(drow["n"]), int(drow["n_live"])
         # Compaction cost is O(base), so the policy gates on BASE size:
-        # a frontier at or below ``frontier_compact_min_rows`` always
+        # a frontier at or below ``frontier_cow_max_rows`` always
         # compacts (rewriting a small base costs less than the delta
         # machinery it would avoid — the growth regime is copy-on-write
         # by construction), and a large base compacts only when the
@@ -1546,7 +1415,7 @@ class CrawlEngine:
         compact = (
             self._force_compact
             or self._fr_base_epoch < 0
-            or self._fr_base_rows <= self.frontier_compact_min_rows
+            or self._fr_base_rows <= self.frontier_cow_max_rows
             or delta_rows >= int(self.frontier_compact_ratio * self._fr_base_rows)
         )
         tables = {"token_state": self.token_state}

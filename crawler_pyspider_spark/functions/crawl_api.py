@@ -84,7 +84,13 @@ def encode_multipart_formdata(
     ``(filename, content, content_type, extra_headers)``; when no
     content type is given it is guessed from the filename.
     ``boundary`` pins the delimiter for deterministic tests; the
-    default is fresh entropy per call."""
+    default is fresh entropy per call.
+
+    Field names and filenames are quoted header parameters: ``"``, CR
+    and LF in them are percent-encoded (``%22``, ``%0D``, ``%0A``, the
+    HTML5 form-encoding rule RFC 7578 §4.2 cites), so no value can end
+    the quoted string or start a header line.  A CR or LF in a
+    Content-Type or extra header name/value raises ``ValueError``."""
     import secrets
 
     if boundary is None:
@@ -93,6 +99,16 @@ def encode_multipart_formdata(
 
     def _b(v) -> bytes:
         return v if isinstance(v, bytes) else str(v).encode("utf-8")
+
+    def _q(v) -> str:
+        return (
+            str(v).replace('"', "%22").replace("\r", "%0D").replace("\n", "%0A")
+        )
+
+    def _hdr(name, value) -> str:
+        if any(c in f"{name}{value}" for c in "\r\n"):
+            raise ValueError(f"CR/LF in multipart part header {name!r}")
+        return f"{name}: {value}"
 
     def _part(headers: list[str], content) -> None:
         chunks.append(b"--" + boundary.encode("ascii"))
@@ -105,7 +121,7 @@ def encode_multipart_formdata(
         for v in val if isinstance(val, (list, tuple)) else [val]:
             if v is None:
                 continue
-            _part([f'Content-Disposition: form-data; name="{key}"'], v)
+            _part([f'Content-Disposition: form-data; name="{_q(key)}"'], v)
 
     fitems = files.items() if isinstance(files, dict) else list(files or [])
     for key, val in fitems:
@@ -118,14 +134,14 @@ def encode_multipart_formdata(
                 fn, content, ctype = val
             else:
                 fn, content, ctype, extra = val[:4]
-                extra_hdrs = [f"{hk}: {hv}" for hk, hv in (extra or {}).items()]
+                extra_hdrs = [_hdr(hk, hv) for hk, hv in (extra or {}).items()]
         else:
             fn, content, ctype = key, val, get_content_type(key)
         hdrs = [
-            f'Content-Disposition: form-data; name="{key}"; filename="{fn}"'
+            f'Content-Disposition: form-data; name="{_q(key)}"; filename="{_q(fn)}"'
         ]
         if ctype:
-            hdrs.append(f"Content-Type: {ctype}")
+            hdrs.append(_hdr("Content-Type", ctype))
         hdrs.extend(extra_hdrs)
         _part(hdrs, content)
 

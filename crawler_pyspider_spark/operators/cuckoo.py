@@ -1,27 +1,30 @@
-"""Partitioned cuckoo-filter URL-seen set (primary tier; bloom fallback).
+"""Partitioned cuckoo-filter URL-seen set (the 10^10-scale dedup tier).
 
-Same role and dataflow as the bloom tier (``operators/seenset.py`` —
-membership pre-filter in front of the frontier MERGE join; the
-reference's analogue is the sqlite point lookup ``database/sqlite/
-taskdb.py:72-85`` + in-memory queue dict ``scheduler/task_queue.py:
-281-286``), but a partial-key cuckoo filter (Fan et al., CoNEXT'14)
-instead of a bloom filter:
+The reference answers "have we seen this URL?" with a per-project sqlite
+point lookup (``database/sqlite/taskdb.py:72-85``) fronted by an
+in-memory queue-membership dict (``scheduler/task_queue.py:281-286``) —
+neither survives 10^10 URLs.  Set-at-a-time, the membership check is the
+*pre-filter* in front of the frontier MERGE join (SURVEY.md §4): novel
+URLs skip the expensive join entirely; only filter-positive ("possibly
+seen") URLs continue to the exact new-vs-old decision join.  False
+positives therefore cost an extra join probe, never correctness.
 
-- **Lower FP at comparable space**: 16-bit fingerprints, 4-slot
-  buckets ⇒ FP ≈ 2·4/2^16 ≈ 0.012 % versus the bloom tier's ~0.8 %,
-  so ~65× fewer wasted exact-join probes per epoch.
+The filter is a partial-key cuckoo filter (Fan et al., CoNEXT'14):
+
+- **Low FP**: 16-bit fingerprints, 4-slot buckets ⇒ FP ≈ 2·4/2^16 ≈
+  0.012 % (a k=7 bloom filter at 10 bits/key sits near 0.8 %).
 - **Deletion** (`delete_keys`): a crawl frontier "forgets" a URL when
-  an itag change or `force_update` re-opens it; bloom cannot delete,
+  an itag change, `force_update` or a project delete re-opens it;
   cuckoo removes one fingerprint copy.
-- Same **no-false-negative** guarantee: every admitted key is either
-  in its two candidate buckets or in the per-shard stash (bounded
-  eviction chains that fail land in the stash, never dropped), so
-  filter-negative URLs may still safely APPEND join-free.
+- **No false negatives**: every admitted key is either in its two
+  candidate buckets or in the per-shard stash (bounded eviction chains
+  that fail land in the stash, never dropped), so filter-negative URLs
+  may safely APPEND join-free.
 
 Layout — hash-partitioned shards, persisted as ordinary rows:
 
     shard    int     pmod(xxhash64(taskid), n_shards)  (same shuffle
-                     key as the bloom tier and the frontier merge)
+                     key as the frontier merge)
     table    binary  n_buckets × 4 slots × uint16 fingerprints (LE);
                      0 = empty slot
     stash    binary  overflow entries, 6 B each (bucket:int32, fp:
@@ -56,8 +59,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from crawler_pyspider_spark.operators.seenset import with_hashes
 
 DEFAULT_SHARDS = 64
 DEFAULT_BUCKETS = 1 << 12  # per shard; power of two
@@ -97,6 +98,17 @@ def empty_shards(
             )
 
     return spark.range(n_shards).mapInPandas(gen, SHARD_SCHEMA)
+
+
+def with_hashes(df: DataFrame, key_col: str = "taskid", n_shards: int = DEFAULT_SHARDS) -> DataFrame:
+    """Append JVM-computed hash columns: _h1, _h2 (int64), shard."""
+    h1 = F.xxhash64(F.col(key_col))
+    h2 = F.xxhash64(F.concat(F.col(key_col), F.lit("#2")))
+    return (
+        df.withColumn("_h1", h1)
+        .withColumn("_h2", h2)
+        .withColumn("shard", F.pmod(h1, F.lit(n_shards)).cast("int"))
+    )
 
 
 def _fp_and_buckets(h2: np.ndarray, buckets: int):
@@ -187,9 +199,10 @@ def probe_combined(
     n_shards: int = DEFAULT_SHARDS,
     buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """One-pass membership probe + insert; same contract as
-    ``seenset.probe_combined`` (returns the combined flagged-urls +
-    new-shards frame; ``split()`` separates them).
+    """One-pass membership probe + insert.  Returns ONE combined frame
+    (cache it, then ``split()``) holding the flagged url rows and the
+    updated shard rows (every shard emitted, touched or not, so the
+    snapshot stays complete).
 
     seen=True ⇒ *possibly* seen (FP ≈ 0.012 %) — route to the exact
     decision join; seen=False ⇒ *definitely* novel — safe to append
@@ -315,9 +328,8 @@ def delete_keys(
     n_shards: int = DEFAULT_SHARDS,
     buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Remove ONE stored copy of each key's fingerprint (the cuckoo
-    capability bloom lacks — re-opening a URL on itag change /
-    force_update).  Keys must have been inserted (deleting a
+    """Remove ONE stored copy of each key's fingerprint (re-opening a
+    URL on itag change / force_update / project delete).  Keys must have been inserted (deleting a
     never-inserted key can evict an aliasing fingerprint — standard
     cuckoo-filter contract).  Returns the updated shards frame."""
     urls_h = with_hashes(urls.select(key_col), key_col, n_shards)

@@ -124,6 +124,33 @@ def test_encode_multipart_formdata():
     assert ct1 != ct2
 
 
+def test_encode_multipart_formdata_escapes_header_injection():
+    """A field name or filename carrying a quote + CRLF cannot end its
+    quoted parameter or start a header line: it is percent-encoded
+    (HTML5 / RFC 7578 form encoding), so no injected header appears and
+    the body keeps its part count.  CR/LF in an extra header name or
+    value is rejected outright."""
+    from crawler_pyspider_spark.functions.crawl_api import (
+        encode_multipart_formdata,
+    )
+
+    evil = '"\r\nX-Injected: 1'
+    _, body = encode_multipart_formdata(
+        {evil: "v"}, {"f": (evil, b"data"), evil: ("ok.txt", b"x")},
+        boundary="BND",
+    )
+    lines = body.split(b"\r\n")
+    assert not any(line.startswith(b"X-Injected") for line in lines)
+    assert b"%22%0D%0AX-Injected: 1" in body
+    # preamble + 3 parts + closing "--\r\n"
+    assert len(body.split(b"--BND")) == 5
+    for hdrs in ({"X-A": "1\r\nX-Injected: 1"}, {"X-A\nX-Injected": "1"}):
+        with pytest.raises(ValueError):
+            encode_multipart_formdata(
+                None, {"f": ("a.txt", b"x", "text/plain", hdrs)}
+            )
+
+
 def test_crawl_builder_files_encodes_multipart():
     """base_handler.py:283-294 parity: files ⇒ multipart body +
     Content-Type header with the boundary + POST default; dict data

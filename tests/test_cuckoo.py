@@ -1,8 +1,7 @@
 """Partitioned cuckoo-filter seen set (operators/cuckoo.py) — the
-north-star's primary membership tier (bloom = fallback).  Same role as
-the bloom tier tests (test_seenset.py): replaces the reference's taskdb
+engine's approximate membership tier: replaces the reference's taskdb
 point lookups (database/sqlite/taskdb.py:72-85) + queue-membership dict
-(task_queue.py:281-286), plus the deletion capability bloom lacks."""
+(task_queue.py:281-286), plus key deletion."""
 
 import numpy as np
 import pytest
@@ -119,8 +118,8 @@ def test_high_load_no_false_negatives(spark):
 
 
 def test_delete_reopens_keys(spark):
-    """delete_keys removes membership (the bloom-impossible op): deleted
-    keys probe unseen again, surviving keys stay seen."""
+    """delete_keys removes membership: deleted keys probe unseen again,
+    surviving keys stay seen."""
     shards = cuckoo.empty_shards(spark, N_SHARDS, BUCKETS)
     _, shards = probe(spark, urls_df(spark, range(100)), shards)
     dels = urls_df(spark, range(40))

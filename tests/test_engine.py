@@ -199,32 +199,36 @@ class TestOracleParity:
         assert seen_engine == oracle.seen_urls()
 
 
-def test_fetch_join_modes_equivalent(spark, small_world, tmp_path):
-    """The four fetch-join strategies (auto / broadcast / probe /
-    shuffle — engine.py fetch dispatch) are PHYSICAL plan choices only:
-    the crawl state after 3 epochs must be identical row-for-row.
-    Previously only 'auto' was exercised by tests; bench runs
-    'shuffle'."""
+def test_fetch_branches_equivalent(spark, small_world, tmp_path, monkeypatch):
+    """The fetch join broadcasts batches up to FETCH_BROADCAST_ROWS and
+    runs a shuffled hash join above it.  The two branches are PHYSICAL
+    plan choices only: the crawl state after 3 epochs must be identical
+    row-for-row.  A cutover of 0 forces the shuffle_hash branch on the
+    small world."""
+    import crawler_pyspider_spark.engine as engine_mod
+
     sig = lambda eng: sorted(  # noqa: E731
         (r.taskid, r.status, r.retried, r.exetime)
         for r in eng.frontier.select(
             "taskid", "status", "retried", "exetime"
         ).collect()
     )
-    states = {}
-    for mode in ("auto", "broadcast", "probe", "shuffle"):
+
+    def crawl(name):
         eng = CrawlEngine(
             spark, small_world["pages"], small_world["robots"],
-            small_world["politeness"], str(tmp_path / f"wh_{mode}"),
-            loop_limit=100000, fetch_join=mode,
+            small_world["politeness"], str(tmp_path / f"wh_{name}"),
+            loop_limit=100000,
         )
         eng.seed(small_world["seeds"])
         eng.run(3)
-        states[mode] = sig(eng)
-    ref = states["auto"]
-    assert ref  # the crawl actually progressed
-    for mode, got in states.items():
-        assert got == ref, f"fetch_join={mode} diverged"
+        return sig(eng)
+
+    broadcast = crawl("broadcast")
+    monkeypatch.setattr(engine_mod, "FETCH_BROADCAST_ROWS", 0)
+    shuffle_hash = crawl("shuffle_hash")
+    assert broadcast  # the crawl actually progressed
+    assert shuffle_hash == broadcast
 
 
 def test_drained_epoch_folds_nothing(spark, small_world, tmp_path):
@@ -239,7 +243,7 @@ def test_drained_epoch_folds_nothing(spark, small_world, tmp_path):
         # keep the frontier on the delta path so an accidental fold
         # would be visible (base stays small enough to always-compact
         # under defaults, which would mask the object-identity check)
-        frontier_compact_min_rows=0, frontier_compact_ratio=1e9,
+        frontier_cow_max_rows=0, frontier_compact_ratio=1e9,
     )
     eng.seed(small_world["seeds"])
     ms = eng.run(10)
@@ -263,7 +267,7 @@ def test_drained_epoch_folds_nothing(spark, small_world, tmp_path):
 
 def test_compaction_policy_state_invariant(spark, small_world, tmp_path):
     """Merge-on-read bookkeeping must be invisible to crawl semantics:
-    compacting every epoch (min_rows=0, ratio=0) and never compacting
+    compacting every epoch (ratio=0) and never compacting
     (huge thresholds — every epoch commits only a frontier_delta) must
     leave the identical frontier view."""
     sig = lambda eng: sorted(  # noqa: E731
@@ -274,10 +278,10 @@ def test_compaction_policy_state_invariant(spark, small_world, tmp_path):
     )
     states = {}
     for name, kw in (
-        ("always", dict(frontier_compact_min_rows=10**9, frontier_compact_ratio=0.0)),
-        # min_rows=0: no base is "small enough to always compact";
+        ("always", dict(frontier_cow_max_rows=10**9, frontier_compact_ratio=0.0)),
+        # cow_max_rows=0: no base is "small enough to always compact";
         # ratio=1e9: the delta never reaches the threshold — delta-only
-        ("never", dict(frontier_compact_min_rows=0, frontier_compact_ratio=1e9)),
+        ("never", dict(frontier_cow_max_rows=0, frontier_compact_ratio=1e9)),
     ):
         eng = CrawlEngine(
             spark, small_world["pages"], small_world["robots"],

@@ -2,7 +2,7 @@
 
 The round-3 scaling evidence ran ``seen_filter="exact"`` (the dedup
 decision is a plain merge join) while the 10^10-scale story rests on
-the bloom/cuckoo tier — so the filter tier's throughput cost/benefit at
+the cuckoo-filter tier — so the filter tier's throughput cost/benefit at
 bench scale was unmeasured.  This tool measures it:
 
 1. **Cost at 4N**: paired-alternating ``exact`` vs ``cuckoo`` legs at

@@ -3,7 +3,7 @@
 Runs alternating crawl legs in ONE session (disk warehouse, growth
 regime: 3 epochs from a half-world seed burst) comparing the shipped
 merge-on-read frontier (delta commits + threshold compaction) against
-copy-on-write (``frontier_compact_min_rows=0`` — every commit rewrites
+copy-on-write (``frontier_compact_ratio=0.0`` — every commit rewrites
 the full frontier, the round-3 regime).  Alternating leg order inside
 one session keeps both variants in near-identical host windows — this
 VM's documented 2-3x weather swings otherwise dominate the comparison
@@ -37,10 +37,12 @@ def main():
         # shipped defaults: small bases always compact (growth regime is
         # copy-on-write), large bases commit deltas until ratio·base
         "mor": {},
-        # pure copy-on-write: every epoch rewrites the full frontier
-        "cow": {"frontier_compact_min_rows": 0, "frontier_compact_ratio": 0.0},
+        # pure copy-on-write: ratio=0.0 rewrites the full frontier on
+        # every commit (cow_max_rows=0 only turns the small-base
+        # trigger off)
+        "cow": {"frontier_cow_max_rows": 0, "frontier_compact_ratio": 0.0},
         # pure merge-on-read: delta-only commits after the first base
-        "delta": {"frontier_compact_min_rows": 0,
+        "delta": {"frontier_cow_max_rows": 0,
                   "frontier_compact_ratio": 1e18},
     }
     order = (sys.argv[2].split(",") if len(sys.argv) > 2
