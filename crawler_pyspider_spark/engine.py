@@ -285,9 +285,7 @@ class CrawlEngine:
         from crawler_pyspider_spark.functions.urls import INTERNAL_HOST
 
         self.politeness = politeness.unionByName(
-            spark.createDataFrame(
-                [(INTERNAL_HOST, 1e9, 1e9)], politeness.schema
-            )
+            FR.local_frame(spark, [(INTERNAL_HOST, 1e9, 1e9)], politeness.schema)
         )
         self.store = SnapshotStore(spark, warehouse)
         # Per-project handler registry (the reference routes every task
@@ -608,6 +606,11 @@ class CrawlEngine:
         carries the payload (S7 fetch semantics)."""
         self._messages.append((project, message))
 
+    CONTROL_ROWS_DDL = (
+        "url string, project string, priority int, exetime double,"
+        " callback string, seq long"
+    )
+
     def _control_rows(self, now: float) -> DataFrame | None:
         """Synthetic control tasks due this epoch: @every cron firings
         (+ their cron_seeds crawls), queued messages, and the
@@ -679,11 +682,7 @@ class CrawlEngine:
         self._fire_on_finished = False
         if not rows:
             return None
-        return self.spark.createDataFrame(
-            rows,
-            "url string, project string, priority int, exetime double,"
-            " callback string, seq long",
-        )
+        return FR.local_frame(self.spark, rows, self.CONTROL_ROWS_DDL)
 
     # -- projectdb dim (S5, scheduler.py:120-125,207-247,298-316) -----------
     ACTIVE_PROJECT_STATUSES = ("RUNNING", "DEBUG")  # projectdb.py:14-22
@@ -968,8 +967,8 @@ class CrawlEngine:
                 (p, float(v.get("rate", 1.0)), float(v.get("burst", 10.0)))
                 for p, v in self._projects.items()
             ]
-            ppol = self.spark.createDataFrame(
-                prows, "key string, rate double, burst double"
+            ppol = FR.local_frame(
+                self.spark, prows, "key string, rate double, burst double"
             )
             proj_bucket = FR.host_budgets(
                 ppol.select(F.col("key").alias("host")),

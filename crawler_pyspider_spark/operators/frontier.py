@@ -54,6 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # status enum — database/base/taskdb.py:59-63
 ACTIVE, SUCCESS, FAILED, BAD = 1, 2, 3, 4
@@ -91,8 +92,33 @@ FRONTIER_SCHEMA = (
 )
 
 
+def local_frame(spark, rows: list[tuple], ddl: str | StructType) -> DataFrame:
+    """A constant frame built from JVM literals: ``rows`` (positional
+    tuples) typed by ``ddl`` (a DDL string or a StructType).
+
+    A frame made from a Python list is a Python RDD: every job that
+    scans it runs one Python-worker task per default partition, even
+    for zero rows.  Here no rows is a typed null projection under
+    ``limit(0)``, which the optimizer folds to an empty LocalRelation
+    (so anti-joins and unions against it are pruned away), and rows
+    are literal structs inlined over a one-row, one-partition range."""
+    schema = ddl if isinstance(ddl, StructType) else StructType.fromDDL(ddl)
+    one = spark.range(1, numPartitions=1)
+    if not rows:
+        return one.select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        ).limit(0)
+    return one.select(F.inline(F.array(*[
+        F.struct(*[
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for v, f in zip(row, schema.fields, strict=True)
+        ])
+        for row in rows
+    ])))
+
+
 def empty_frontier(spark) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
+    return local_frame(spark, [], FRONTIER_SCHEMA)
 
 
 def normalize_incoming(incoming: DataFrame, now: float) -> DataFrame:
@@ -632,7 +658,7 @@ def update_token_state(token_state: DataFrame, used: DataFrame, now: float) -> D
 
 
 def empty_token_state(spark) -> DataFrame:
-    return spark.createDataFrame([], "host string, tokens double, last_update double")
+    return local_frame(spark, [], "host string, tokens double, last_update double")
 
 
 def with_global_rank(

@@ -1734,10 +1734,12 @@ def q_seq_pack(spark, sf_dir):
 
     A naive global cumulative window is a SINGLE-PARTITION sort; this
     plan shards the prefix sum: per-range-bucket token totals (dim-
-    sized) are collected once, their running offsets are broadcast back
-    as a literal map, and each bucket computes its local cumulative sum
+    sized: one row per 1000 docs) get their running offsets from a
+    window over that small frame, the offsets are broadcast-joined
+    back, and each bucket computes its local cumulative sum
     independently — the standard two-phase distributed prefix-sum, so
-    the heavy window is per-bucket, never global."""
+    the heavy window is per-bucket, never global, and nothing is
+    collected to the driver."""
     d = (
         _t(spark, sf_dir, "documents")
         .select(
@@ -1746,29 +1748,23 @@ def q_seq_pack(spark, sf_dir):
         )
         .withColumn("_bucket", (F.col("doc_id") / SEQ_PACK_BUCKET).cast("long"))
     )
-    totals = (
-        d.groupBy("_bucket").agg(F.sum("n_tokens").alias("_tot"))
-        .orderBy("_bucket")
-        .collect()  # dim-sized: one row per 1000 docs
-    )
-    offsets, acc = {}, 0
-    for r in totals:
-        offsets[r["_bucket"]] = acc
-        acc += r["_tot"]
-    off = F.element_at(
-        F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        ),
-        F.col("_bucket"),
+    before = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        d.groupBy("_bucket")
+        .agg(F.sum("n_tokens").alias("_tot"))
+        .select(
+            "_bucket",
+            F.coalesce(F.sum("_tot").over(before), F.lit(0)).alias("_off"),
+        )
     )
     w = Window.partitionBy("_bucket").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    return d.select(
+    return d.join(F.broadcast(offsets), "_bucket").select(
         "doc_id",
         "n_tokens",
         (
-            (off + F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
+            (F.col("_off") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
             / SEQ_PACK_BIN
         ).cast("long").alias("bin"),
     )

@@ -8,8 +8,10 @@ here is chosen so the *same* code runs unchanged under
   shuffles, per BASELINE.json north_star).
 - ``spark.sql.shuffle.partitions`` proportional to cores (a real
   deployment sets it ~2-3x total executor cores).
-- Arrow enabled: every Python-side transform in this engine is a
-  vectorized pandas UDF (no per-row Python anywhere).
+- Arrow enabled.  Python runs only inside vectorized pandas UDFs
+  (canonicalize, parse, ...); constant frames are JVM literals
+  (``operators.frontier.local_frame``), never a Python-list DataFrame,
+  whose scan would start Python workers in every job that reads it.
 """
 
 from __future__ import annotations
@@ -17,6 +19,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_mem_default() -> str:
+    """Two thirds of the host's available memory, capped at 24g: a heap
+    larger than the host gets the JVM OOM-killed mid-run."""
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            info = dict(line.split(":", 1) for line in f)
+        avail_mb = int(info["MemAvailable"].split()[0]) // 1024
+    except (OSError, KeyError, ValueError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, avail_mb * 2 // 3)}m"
 
 
 def get_spark(

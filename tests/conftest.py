@@ -5,20 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crawler_pyspider_spark.session import get_spark  # noqa: E402
-
-
-def _driver_mem_default() -> str:
-    """Two thirds of the host's available memory, capped at 24g: a heap
-    larger than the host gets the suite's JVM OOM-killed mid-run."""
-    cap_mb = 24 * 1024
-    try:
-        with open("/proc/meminfo") as f:
-            info = dict(line.split(":", 1) for line in f)
-        avail_mb = int(info["MemAvailable"].split()[0]) // 1024
-    except (OSError, KeyError, ValueError):
-        return f"{cap_mb}m"
-    return f"{min(cap_mb, avail_mb * 2 // 3)}m"
+from crawler_pyspider_spark.session import driver_mem_default, get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
@@ -30,7 +17,7 @@ def spark():
     # down with ConnectionRefused.  Give the test driver as much headroom
     # as the host allows (a 10g heap ran the suite at an 11.4 GB RSS
     # peak); an exported SPARK_GRAFT_DRIVER_MEM still wins.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _driver_mem_default())
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_mem_default())
     s = get_spark(app_name="tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()

@@ -318,3 +318,36 @@ def test_host_bucket_count_is_state_invariant(spark, small_world, tmp_path):
         eng.run(3)
         states[n] = sig(eng)
     assert states[3] == states[1024] and states[3]
+
+
+def test_engine_state_has_no_python_rdd(spark, small_world, tmp_path):
+    """Python runs only inside the pandas UDFs: the engine's own
+    constant frames (empty base, delta, view and token state, the
+    INTERNAL_HOST politeness row) are JVM literals, so the optimized
+    plans of its state hold no LogicalRDD — a frame made from a Python
+    list would scan a Python RDD in every job that reads it.  Checked
+    after construction and after each epoch; the default config
+    compacts every epoch here, so no checkpointed delta (also a
+    LogicalRDD, but a JVM one) is left in the view."""
+    eng = CrawlEngine(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], str(tmp_path / "wh"), loop_limit=100000,
+    )
+
+    def rdd_scans():
+        return {
+            name: df._jdf.queryExecution().optimizedPlan().toString().count(
+                "LogicalRDD"
+            )
+            for name in ("frontier", "token_state", "politeness", "pending")
+            if (df := getattr(eng, name)) is not None
+        }
+
+    counts = rdd_scans()
+    assert set(counts.values()) == {0}, counts
+    eng.seed(small_world["seeds"])
+    for _ in range(3):
+        m = eng.run_epoch()
+        assert m["frontier_compacted"]
+        counts = rdd_scans()
+        assert len(counts) == 4 and set(counts.values()) == {0}, counts

@@ -474,6 +474,70 @@ def test_with_global_rank_scalable_path_matches_window(spark):
     assert ranks == sorted(ranks) and ranks[0] == 1 and ranks[-1] == 500
 
 
+def test_local_frame_rows_names_and_types(spark):
+    """local_frame builds constant frames from JVM literals: given rows
+    come back with the DDL's column names and types (None stays null),
+    and no rows is an empty frame the optimizer folds to an empty
+    LocalRelation."""
+    from pyspark.sql.types import StructType
+
+    from crawler_pyspider_spark.engine import CrawlEngine
+
+    def types(ddl):
+        return [(f.name, f.dataType.simpleString()) for f in StructType.fromDDL(ddl)]
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    rows = [
+        ("data:,on_finished:1", "p", 9, 0.0, "on_finished", 900_000_000),
+        ("data:,x", None, 0, 1.5, None, 3_000_000_000),
+    ]
+    ctl = FR.local_frame(spark, rows, CrawlEngine.CONTROL_ROWS_DDL)
+    assert ctl.dtypes == types(CrawlEngine.CONTROL_ROWS_DDL)
+    assert [tuple(r) for r in ctl.collect()] == rows
+    assert "LogicalRDD" not in plan(ctl)
+    for df, ddl in (
+        (FR.empty_frontier(spark), FR.FRONTIER_SCHEMA),
+        (FR.empty_token_state(spark), "host string, tokens double, last_update double"),
+    ):
+        assert df.dtypes == types(ddl)
+        assert df.collect() == []
+        assert plan(df).startswith("LocalRelation <empty>"), plan(df)
+
+
+def test_upsert_layers_lease_shadowed_only_where_status_exists(spark):
+    """The engine's epoch-tail fold ``upsert_layers([delta, lease rows,
+    status rows])``: a key with a status row takes the status row's
+    values (the outcome clears the lease); a key whose status row is
+    missing keeps the lease layer's ``lease_expires``; a key only in
+    the delta is untouched."""
+    lease = NOW + FR.LEASE_SECONDS
+    keys = [f"k{i}" for i in range(5)]
+    delta = mk_frontier(spark, [dict(taskid=k, priority=1) for k in keys])
+    lease_rows = mk_frontier(
+        spark, [dict(taskid=k, priority=1, lease_expires=lease) for k in keys[:4]]
+    )
+    status_rows = mk_frontier(
+        spark,
+        [
+            dict(taskid=k, priority=1, status=FR.SUCCESS, lastcrawltime=NOW)
+            for k in keys[:2]
+        ],
+    )
+    out = {
+        r["taskid"]: (r["status"], r["lease_expires"], r["lastcrawltime"])
+        for r in FR.upsert_layers([delta, lease_rows, status_rows]).collect()
+    }
+    assert out == {
+        "k0": (FR.SUCCESS, None, NOW),
+        "k1": (FR.SUCCESS, None, NOW),
+        "k2": (FR.ACTIVE, lease, None),
+        "k3": (FR.ACTIVE, lease, None),
+        "k4": (FR.ACTIVE, None, None),
+    }
+
+
 def test_upsert_layers_precedence_single_shuffle(spark):
     """upsert_layers: later layers win per key; result equals the
     chained pairwise upserts; the plan has exactly ONE exchange (the

@@ -5,7 +5,10 @@ enabled, then aggregates the log per stage: wall duration, summed task
 run/GC/serialization time, shuffle bytes, task count.  Comparing the
 output at 8 vs 32 cores pinpoints WHICH stages fail to scale (driver
 gaps, GC, skew, bandwidth saturation) instead of guessing from epoch
-timers.
+timers.  Stages that scan a Python RDD (a ``PythonRDD`` in their RDD
+lineage, e.g. a DataFrame made from a Python list) are flagged and
+counted in the summary: outside the pandas UDFs the engine should
+start no Python worker.
 
 Usage: SPARK_GRAFT_CPUS=32 python tools/stage_profile.py [out.json]
 """
@@ -22,14 +25,15 @@ sys.path.insert(0, REPO)
 
 
 def run_and_profile(cpus: int, out_path: str) -> dict:
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
+    from crawler_pyspider_spark.session import driver_mem_default, get_spark
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_mem_default())
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark_graft_local")
     os.environ.setdefault("SPARK_GRAFT_WH_DIR", "/dev/shm/spark_graft_wh")
     os.makedirs(os.environ["SPARK_GRAFT_WH_DIR"], exist_ok=True)
     evdir = tempfile.mkdtemp(prefix="spark_events_")
 
     from bench import crawl_bench
-    from crawler_pyspider_spark.session import get_spark
 
     spark = get_spark(
         app_name=f"stage_profile_{cpus}",
@@ -56,6 +60,7 @@ def run_and_profile(cpus: int, out_path: str) -> dict:
 
     stages = parse_event_dir(evdir, app_id)
     top = sorted(stages.items(), key=lambda kv: -kv[1]["wall_ms"])
+    py = [s for s in stages.values() if s["python_rdd"]]
     out = {
         "cpus": cpus,
         "throughput_urls_per_sec": res["throughput_urls_per_sec"],
@@ -64,6 +69,8 @@ def run_and_profile(cpus: int, out_path: str) -> dict:
         "sum_stage_wall_sec": round(sum(s["wall_ms"] for s in stages.values()) / 1e3, 1),
         "sum_run_sec": round(sum(s["run_ms"] for s in stages.values()) / 1e3, 1),
         "sum_gc_sec": round(sum(s["gc_ms"] for s in stages.values()) / 1e3, 1),
+        "python_rdd_stages": len(py),
+        "python_rdd_run_sec": round(sum(s["run_ms"] for s in py) / 1e3, 1),
         "stages": [
             {
                 "id": sid,
@@ -79,7 +86,8 @@ def run_and_profile(cpus: int, out_path: str) -> dict:
         json.dump(out, f, indent=2)
     print(json.dumps({k: out[k] for k in (
         "cpus", "throughput_urls_per_sec", "elapsed_sec",
-        "sum_stage_wall_sec", "sum_run_sec", "sum_gc_sec")}))
+        "sum_stage_wall_sec", "sum_run_sec", "sum_gc_sec",
+        "python_rdd_stages", "python_rdd_run_sec")}))
     return out
 
 
@@ -119,6 +127,9 @@ def parse_event_dir(evdir: str, app_id: str) -> dict[int, dict]:
                     if sub and comp:
                         st["wall_ms"] = comp - sub
                     st["n_tasks"] = si.get("Number of Tasks", 0)
+                    st["python_rdd"] = any(
+                        r.get("Name") == "PythonRDD" for r in si.get("RDD Info", [])
+                    )
                 elif et == "SparkListenerTaskEnd":
                     sid = ev["Stage ID"]
                     st = stages.setdefault(sid, _zero())
@@ -141,7 +152,8 @@ def parse_event_dir(evdir: str, app_id: str) -> dict[int, dict]:
 
 def _zero() -> dict:
     return {
-        "name": "", "wall_ms": 0, "n_tasks": 0, "run_ms": 0, "gc_ms": 0,
+        "name": "", "wall_ms": 0, "n_tasks": 0, "python_rdd": False,
+        "run_ms": 0, "gc_ms": 0,
         "deser_ms": 0, "result_ser_ms": 0,
         "shuffle_read_mb": 0.0, "shuffle_write_mb": 0.0, "spill_mb": 0.0,
     }
