@@ -137,7 +137,9 @@ def crawl_only_main() -> None:
     plan occupancy from per-task host slowdown per pair."""
     import tempfile as _tempfile
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
+    from crawler_pyspider_spark.session import driver_mem_default
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_mem_default())
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark_graft_local")
     os.environ.setdefault("SPARK_GRAFT_WH_DIR", "/dev/shm/spark_graft_wh")
     os.makedirs(os.environ["SPARK_GRAFT_WH_DIR"], exist_ok=True)
@@ -222,13 +224,13 @@ def _task_cpu_from_events(evdir: str, app_id: str, since_ms: float):
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "96g")
+    from crawler_pyspider_spark.queries import QUERIES
+    from crawler_pyspider_spark.session import driver_mem_default, get_spark
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_mem_default())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-
-    from crawler_pyspider_spark.queries import QUERIES
-    from crawler_pyspider_spark.session import get_spark
 
     spark = get_spark(
         app_name="bench",

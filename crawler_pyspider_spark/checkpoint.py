@@ -26,23 +26,8 @@ import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footers — no Spark job.  Fallback only
-    (manifest repair); the commit path counts via ``Observation`` inside
-    the write job itself, because this driver-serial walk was measured
-    to grow with core count (more tasks -> more files) and became the
-    epoch-commit bottleneck at local[32]."""
-    n = 0
-    for root, _, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-    return n
 
 
 class SnapshotStore:
@@ -64,23 +49,21 @@ class SnapshotStore:
         epoch: int,
         tables: dict[str, DataFrame],
         counters: dict | None = None,
-        engine_state: dict | None = None,
         engine_state_fn=None,
     ) -> dict:
         """Write all epoch tables, then atomically publish the manifest.
 
-        ``engine_state`` carries small driver-side scheduler state
-        (pause streaks, lifecycle flags) so resume is exact.
         ``engine_state_fn``, if given, is called with the written
         ``manifest['tables']`` dict (so it can see this epoch's row
         counts — e.g. the pending size that decides on_finished) and its
-        return value becomes the stored engine_state: the manifest then
-        records END-of-epoch lifecycle state, not last epoch's."""
+        return value becomes the manifest's ``engine_state``: small
+        driver-side scheduler state (pause streaks, lifecycle flags)
+        recorded at the END of the epoch, so resume is exact."""
         manifest: dict = {
             "epoch": epoch,
             "tables": {},
             "counters": counters or {},
-            "engine_state": engine_state or {},
+            "engine_state": {},
         }
 
         def _write_one(item):
@@ -100,14 +83,8 @@ class SnapshotStore:
         # _SUCCESS) is driver-serial; overlapping the tables' jobs hides
         # that tail.  Threads only submit jobs — the executor pool is
         # still the one scheduler — so this is safe at any table count.
-        items = list(tables.items())
-        if len(items) > 1:
-            with ThreadPoolExecutor(max_workers=min(4, len(items))) as ex:
-                for name, entry in ex.map(_write_one, items):
-                    manifest["tables"][name] = entry
-        else:
-            for it in items:
-                name, entry = _write_one(it)
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            for name, entry in ex.map(_write_one, tables.items()):
                 manifest["tables"][name] = entry
         if engine_state_fn is not None:
             manifest["engine_state"] = engine_state_fn(manifest["tables"])

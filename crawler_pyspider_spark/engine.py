@@ -40,6 +40,11 @@ from crawler_pyspider_spark.functions.extract import parse_page_meta
 from crawler_pyspider_spark.functions.urls import with_url_identity
 from crawler_pyspider_spark.operators import frontier as FR
 from crawler_pyspider_spark.operators import cuckoo
+from crawler_pyspider_spark.operators.redirects import (
+    DEFAULT_MAX_REDIRECTS,
+    redirect_edges,
+    resolve_redirects,
+)
 from crawler_pyspider_spark.operators.robots import robots_gate
 
 BASE_EPOCH_TS = 1704067200.0  # 2024-01-01T00:00:00Z — fixture base time
@@ -272,7 +277,7 @@ class CrawlEngine:
         fetch_mode: str = "pages",
         fetch_pool_size: int = 100,
         fetch_timeout: float = 20.0,
-        max_redirects: int = 5,
+        max_redirects: int = DEFAULT_MAX_REDIRECTS,
         frontier_cow_max_rows: int = 50_000,
         frontier_compact_ratio: float = 0.2,
     ):
@@ -360,8 +365,6 @@ class CrawlEngine:
         # — and probed per epoch only when the world actually contains
         # redirects; an all-200 world costs zero extra joins.
         self.max_redirects = max_redirects
-        from crawler_pyspider_spark.operators.redirects import redirect_edges
-
         self._redirect_edges = (
             redirect_edges(pages) if fetch_mode == "pages" else None
         )
@@ -467,12 +470,15 @@ class CrawlEngine:
         max_by shuffle would merge against a frame known to be empty.
 
         ``changes`` may be a LIST of precedence-ordered layers (later
-        wins per key, e.g. [lease stamps, fetch statuses]): all layers
-        and the existing delta resolve in ONE max_by shuffle
-        (upsert_layers) instead of one shuffle per layer."""
+        wins per key, e.g. [lease stamps, fetch statuses, tombstones]):
+        all layers and the existing delta resolve in ONE max_by shuffle
+        (upsert_layers) instead of one shuffle per layer.  A layer that
+        already carries ``_live`` (``_tombstones``) keeps it; any other
+        layer is live."""
         layers = changes if isinstance(changes, list) else [changes]
         live = [
-            c.withColumn("_live", F.lit(True)).select(*self.DELTA_COLS)
+            (c if "_live" in c.columns else c.withColumn("_live", F.lit(True)))
+            .select(*self.DELTA_COLS)
             for c in layers
         ]
         if self._fr_delta_empty and len(live) == 1:
@@ -485,27 +491,21 @@ class CrawlEngine:
         self._fr_delta_empty = False
         self._rebuild_view()
 
-    def _drop_keys(self, keys: DataFrame) -> None:
-        """Delete (project, taskid) keys from the frontier via delta
-        tombstones (the MoR equivalent of the reference's taskdb row
-        deletes for ephemeral control tasks).  A later re-insert of the
-        same key upserts over the tombstone, so drops are not sticky.
-        Eager localCheckpoint for the same plan-growth reason as
-        ``_apply_changes``."""
+    def _tombstones(self, keys: DataFrame) -> DataFrame:
+        """Delta rows that delete (project, taskid) keys from the
+        frontier (the MoR equivalent of the reference's taskdb row
+        deletes for ephemeral control tasks), folded by
+        ``_apply_changes``.  A later re-insert of the same key upserts
+        over the tombstone, so drops are not sticky."""
         dtypes = dict(FR.empty_frontier(self.spark).dtypes)
-        tomb = keys.select("project", "taskid")
-        for c in FR.FRONTIER_COLS:
-            if c not in ("project", "taskid"):
-                tomb = tomb.withColumn(c, F.lit(None).cast(dtypes[c]))
-        tomb = tomb.select(*FR.FRONTIER_COLS).withColumn("_live", F.lit(False))
-        if self._fr_delta_empty:
-            self._fr_delta = tomb.localCheckpoint(eager=True)
-        else:
-            self._fr_delta = FR.upsert(
-                self._fr_delta, tomb, cols=self.DELTA_COLS
-            ).localCheckpoint(eager=True)
-        self._fr_delta_empty = False
-        self._rebuild_view()
+        return keys.select(
+            *[
+                F.col(c) if c in ("project", "taskid")
+                else F.lit(None).cast(dtypes[c]).alias(c)
+                for c in FR.FRONTIER_COLS
+            ],
+            F.lit(False).alias("_live"),
+        )
 
     def _set_base(self, base: DataFrame, rows: int, epoch: int) -> None:
         """Install a new compacted base: partitioned by the merge key so
@@ -761,7 +761,7 @@ class CrawlEngine:
                 n_shards=self.seen_shards_n,
                 buckets=self.seen_buckets,
             )
-        self._drop_keys(keys)
+        self._apply_changes(self._tombstones(keys))
         self._force_compact = True
         if self.pending is not None:
             self.pending = self.pending.filter(F.col("project") != name)
@@ -1059,10 +1059,6 @@ class CrawlEngine:
                 # rewrite url to the chain end (≤ max_redirects hops);
                 # taskid stays keyed on orig_url — the scheduler never
                 # sees intermediate hops (reference semantics)
-                from crawler_pyspider_spark.operators.redirects import (
-                    resolve_redirects,
-                )
-
                 http_rows = resolve_redirects(
                     http_rows, self._redirect_edges, self.max_redirects
                 )
@@ -1341,22 +1337,21 @@ class CrawlEngine:
                 # the handshake task is ephemeral — never tracked
                 # (scheduler.py:232-247 consumes it without a status)
                 nss_pred = nss_pred | (F.col("callback") == "_on_get_info")
-            drop_keys = None
+            tombs = []
             if nss_keys or self._projects is not None:
                 # @not_send_status: the scheduler never hears about these
                 # tasks; tombstone the ephemeral rows instead of folding
                 # SUCCESS
-                drop_keys = statuses.filter(nss_pred).select(
-                    "project", "taskid"
-                )
+                tombs = [self._tombstones(statuses.filter(nss_pred))]
                 statuses = statuses.filter(~nss_pred)
             # ONE eager fold for the whole epoch tail: lease stamps (W4)
-            # shadowed per-key by the fetch/process outcomes.  The lease
-            # rows only survive for keys with no status row — none by
-            # construction today, but the layered upsert keeps the
-            # invariant explicit (an async fetcher stage would rely on
-            # it).  delta + lease + status resolve in a single max_by
-            # shuffle inside the one delta materialization.
+            # shadowed per-key by the fetch/process outcomes, then the
+            # @not_send_status tombstones.  The lease rows only survive
+            # for keys with no status row — none by construction today,
+            # but the layered upsert keeps the invariant explicit (an
+            # async fetcher stage would rely on it).  delta + lease +
+            # status + tombstones resolve in a single max_by shuffle
+            # inside the one delta materialization.
             _t = _time.monotonic()
             self._apply_changes(
                 [
@@ -1364,10 +1359,9 @@ class CrawlEngine:
                     FR.status_changes(
                         self.frontier, statuses.drop("callback"), now
                     ),
+                    *tombs,
                 ]
             )
-            if drop_keys is not None:
-                self._drop_keys(drop_keys)
             m["t_status_fold"] = round(_time.monotonic() - _t, 2)
             _t = _time.monotonic()
             m["robots_denied"] = denied.count()
@@ -1486,37 +1480,12 @@ class CrawlEngine:
         m["n_results"] = manifest["tables"].get("results", {}).get("rows", 0)
         m["n_pending"] = manifest["tables"].get("pending", {}).get("rows", 0)
         m["frontier_rows"] = manifest["engine_state"]["fr_rows"]
-        self._frontier_rows = m["frontier_rows"]
 
         # reload committed state: truncates lineage AND makes the next
-        # epoch start from exactly what a resume would see
+        # epoch start from exactly what a resume sees — the same loader
         _t = _time.monotonic()
-        if compact:
-            self._set_base(
-                self.store.read("frontier", self.epoch),
-                manifest["tables"]["frontier"]["rows"],
-                self.epoch,
-            )
-            self._fr_base.count()  # materialize the new base cache
-        else:
-            self._fr_delta = self.store.read("frontier_delta", self.epoch)
-            self._fr_delta_empty = delta_rows == 0
-            self._rebuild_view()
+        self._load(self.epoch, manifest)
         self._force_compact = False
-        self.token_state = self.store.read("token_state", self.epoch)
-        if "seen_shards" in manifest["tables"]:
-            self.seen_shards = self.store.read("seen_shards", self.epoch)
-        if "project_token_state" in manifest["tables"]:
-            self.project_token_state = self.store.read(
-                "project_token_state", self.epoch
-            )
-        if manifest["tables"].get("pending", {}).get("rows", 0) > 0:
-            self.pending = self.store.read("pending", self.epoch)
-            self._pending_rows = manifest["tables"]["pending"]["rows"]
-        else:
-            self.pending = None
-            self._pending_rows = 0
-
         for c in caches:
             c.unpersist()
         m["t_reload"] = round(_time.monotonic() - _t, 2)
@@ -1527,6 +1496,37 @@ class CrawlEngine:
         return [self.run_epoch() for _ in range(epochs)]
 
     # -- resume -------------------------------------------------------------
+    def _load(self, epoch: int, manifest: dict) -> None:
+        """Install every state table ``manifest`` (epoch ``epoch``) names.
+        The one install path for the end-of-epoch reload and ``resume``,
+        so a resumed engine holds exactly the live engine's state."""
+        tables = manifest["tables"]
+        st = manifest.get("engine_state", {})
+        base_epoch = st.get("fr_base_epoch")
+        if base_epoch is None:
+            # pre-MoR snapshot: the frontier table at `epoch` IS the base
+            base_epoch = epoch if "frontier" in tables else -1
+        if base_epoch != self._fr_base_epoch:
+            bman = manifest if base_epoch == epoch else self.store.manifest(base_epoch)
+            self._set_base(
+                self.store.read("frontier", base_epoch),
+                bman["tables"]["frontier"]["rows"],
+                base_epoch,
+            )
+            self._fr_base.count()  # materialize the new base cache
+        if "frontier_delta" in tables:
+            self._fr_delta = self.store.read("frontier_delta", epoch)
+            self._fr_delta_empty = tables["frontier_delta"]["rows"] == 0
+            self._rebuild_view()
+        self._frontier_rows = st.get("fr_rows", self._fr_base_rows)
+        for name in ("token_state", "seen_shards", "project_token_state"):
+            if name in tables:
+                setattr(self, name, self.store.read(name, epoch))
+        self._pending_rows = tables.get("pending", {}).get("rows", 0)
+        self.pending = (
+            self.store.read("pending", epoch) if self._pending_rows else None
+        )
+
     @classmethod
     def resume(cls, spark, pages, robots, politeness, warehouse, **kwargs):
         """Rebuild an engine from the last committed snapshot — the
@@ -1538,34 +1538,7 @@ class CrawlEngine:
             return eng
         eng.epoch = last
         manifest = eng.store.manifest(last)
-        st0 = manifest.get("engine_state", {})
-        base_epoch = st0.get("fr_base_epoch")
-        if base_epoch is None:
-            # legacy snapshot (pre-MoR): the frontier table at `last`
-            # IS the base
-            base_epoch = last if "frontier" in manifest["tables"] else -1
-        if base_epoch >= 0:
-            bman = eng.store.manifest(base_epoch)
-            eng._set_base(
-                eng.store.read("frontier", base_epoch),
-                bman["tables"]["frontier"]["rows"],
-                base_epoch,
-            )
-        if "frontier_delta" in manifest["tables"]:
-            eng._fr_delta = eng.store.read("frontier_delta", last)
-            eng._fr_delta_empty = False
-            eng._rebuild_view()
-        eng._frontier_rows = st0.get("fr_rows", eng._fr_base_rows)
-        eng.token_state = eng.store.read("token_state", last)
-        if "seen_shards" in manifest["tables"]:
-            eng.seen_shards = eng.store.read("seen_shards", last)
-        if "project_token_state" in manifest["tables"]:
-            eng.project_token_state = eng.store.read("project_token_state", last)
-        if manifest["tables"].get("pending", {}).get("rows", 0) > 0:
-            eng.pending = eng.store.read("pending", last)
-            eng._pending_rows = manifest["tables"]["pending"]["rows"]
-        else:
-            eng._pending_rows = 0
+        eng._load(last, manifest)
         st = manifest.get("engine_state", {})
         eng._project_state = st.get("project_state", {})
         eng._had_selects = st.get("had_selects", False)

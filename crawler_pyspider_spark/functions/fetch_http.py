@@ -41,10 +41,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from crawler_pyspider_spark.operators.redirects import (
+    DEFAULT_MAX_REDIRECTS,
+    REDIRECT_STATUSES,
+)
+
 USER_AGENT = "spark-frontier/1.0"
 CONNECTION_ERROR_CODE = 599  # tornado_fetcher handle_error convention
-REDIRECT_CODES = (301, 302, 303, 307, 308)
-MAX_REDIRECTS = 5  # tornado_fetcher.py max_redirects default
 
 
 class _NoRedirect(urllib.request.HTTPRedirectHandler):
@@ -81,7 +84,7 @@ def fetch_one(
     etag: str | None,
     timeout: float,
     fetch_json: str | None = None,
-    max_redirects: int = MAX_REDIRECTS,
+    max_redirects: int = DEFAULT_MAX_REDIRECTS,
     cookies_json: str | None = None,
 ):
     """One conditional request following ≤ ``max_redirects`` manually ->
@@ -157,7 +160,7 @@ def fetch_one(
                 )
         except urllib.error.HTTPError as e:
             _update_jar(jar, e.headers)
-            if e.code in REDIRECT_CODES and hops < max_redirects:
+            if e.code in REDIRECT_STATUSES and hops < max_redirects:
                 loc = e.headers.get("Location")
                 if loc:
                     from urllib.parse import urljoin
@@ -178,7 +181,7 @@ def fetch_http(
     tasks: DataFrame,
     pool_size: int = 100,
     timeout: float = 20.0,
-    max_redirects: int = MAX_REDIRECTS,
+    max_redirects: int = DEFAULT_MAX_REDIRECTS,
 ) -> DataFrame:
     """Fetch every task row over HTTP; appends _p_html/_p_status/_p_etag.
 

@@ -351,3 +351,138 @@ def test_engine_state_has_no_python_rdd(spark, small_world, tmp_path):
         assert m["frontier_compacted"]
         counts = rdd_scans()
         assert len(counts) == 4 and set(counts.values()) == {0}, counts
+
+
+def _frontier_sig(eng):
+    return sorted(
+        (r.taskid, r.status, r.retried, r.exetime)
+        for r in eng.frontier.select(
+            "taskid", "status", "retried", "exetime"
+        ).collect()
+    )
+
+
+def _uninterrupted_sig(spark, small_world, wh, epochs, **kw):
+    eng = CrawlEngine(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], wh, **kw,
+    )
+    eng.seed(small_world["seeds"])
+    eng.run(epochs)
+    return _frontier_sig(eng)
+
+
+@pytest.mark.parametrize("fault", ["manifest_publish", "table_write"])
+def test_torn_commit_resumes_last_published_epoch(
+    spark, small_world, tmp_path, monkeypatch, fault
+):
+    """A commit that dies after (or while) writing its tables but before
+    its manifest is published leaves an epoch that resume ignores: the
+    engine restarts from the previous manifest, and the crawl it then
+    runs equals an uninterrupted one.  ``manifest_publish`` fails the
+    manifest dump after every table of epoch 2 is on disk;
+    ``table_write`` fails one table's Spark write job of epoch 2 (its
+    target path sits under a regular file) while the others succeed."""
+    import json
+    import types
+
+    from crawler_pyspider_spark import checkpoint
+
+    kw = dict(loop_limit=100000)
+    wh = str(tmp_path / "wh")
+    eng = CrawlEngine(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], wh, **kw,
+    )
+    eng.seed(small_world["seeds"])
+    eng.run(2)
+    with monkeypatch.context() as mp:
+        if fault == "manifest_publish":
+            def dump(*a, **k):
+                raise OSError("killed before the manifest publish")
+
+            mp.setattr(
+                checkpoint, "json", types.SimpleNamespace(dump=dump, load=json.load)
+            )
+        else:
+            blocker = tmp_path / "blocker"
+            blocker.write_text("")
+            table_path = eng.store.table_path
+            mp.setattr(
+                eng.store, "table_path",
+                lambda name, epoch: (
+                    str(blocker / f"epoch={epoch}") if name == "token_state"
+                    else table_path(name, epoch)
+                ),
+            )
+        with pytest.raises(Exception):
+            eng.run_epoch()
+    assert (tmp_path / "wh" / "frontier" / "epoch=2").exists()
+    del eng
+    resumed = CrawlEngine.resume(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], wh, **kw,
+    )
+    assert resumed.epoch == 1
+    resumed.run(2)
+    assert resumed.epoch == 3
+    cont = _uninterrupted_sig(spark, small_world, str(tmp_path / "wh_cont"), 4, **kw)
+    assert cont and _frontier_sig(resumed) == cont
+
+
+def test_resume_from_merge_on_read_snapshot(spark, small_world, tmp_path):
+    """Resume installs a merge-on-read snapshot (a base from an earlier
+    epoch plus the last epoch's delta) exactly as the live engine's
+    end-of-epoch reload does, and the crawl continues identically."""
+    kw = dict(loop_limit=100000, frontier_cow_max_rows=0, frontier_compact_ratio=1e9)
+    wh = str(tmp_path / "wh")
+    eng = CrawlEngine(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], wh, **kw,
+    )
+    eng.seed(small_world["seeds"])
+    ms = eng.run(4)
+    assert not any(m["frontier_compacted"] for m in ms[1:])
+    resumed = CrawlEngine.resume(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], wh, **kw,
+    )
+
+    def state(e):
+        return (
+            e._fr_base_epoch, e._fr_base_rows, e._fr_delta_empty,
+            e._frontier_rows, e._pending_rows,
+        )
+
+    assert state(resumed) == state(eng)
+    assert resumed._fr_base_epoch == 0 and not resumed._fr_delta_empty
+    assert _frontier_sig(resumed) == _frontier_sig(eng)
+    resumed.run(3)
+    cont = _uninterrupted_sig(spark, small_world, str(tmp_path / "wh_cont"), 7, **kw)
+    assert cont and _frontier_sig(resumed) == cont
+
+
+def test_status_fold_materializes_delta_once(spark, small_world, tmp_path, monkeypatch):
+    """A selecting epoch of an engine with a projects dim materializes
+    the frontier delta twice: once for the ingest fold and once for the
+    epoch tail, whose lease stamps, statuses and @not_send_status
+    tombstones resolve in one shuffle.  Tombstones must not pay a
+    materialization of their own, even when there are none to fold."""
+    eng = CrawlEngine(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], str(tmp_path / "wh"), loop_limit=100000,
+        projects={"bench": {"status": "RUNNING", "rate": 1000.0, "burst": 10000.0}},
+    )
+    eng.seed(small_world["seeds"])
+    cls = type(eng.frontier)
+    calls = []
+    checkpoint = cls.localCheckpoint
+
+    def counting(self, *a, **k):
+        calls.append(1)
+        return checkpoint(self, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    m = eng.run_epoch()
+    assert m["selected"] > 0
+    assert len(calls) == 2

@@ -24,9 +24,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main():
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     n_hosts = max(n_pages // 100, 16)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "96g")
     from bench import crawl_bench
-    from crawler_pyspider_spark.session import get_spark
+    from crawler_pyspider_spark.session import driver_mem_default, get_spark
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_mem_default())
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
